@@ -106,8 +106,8 @@ GRID_OPS = {
 ALL_IDS = [
     "adams_hemi", "adams_ws1", "adams_ws2", "aea", "aeqd", "affine",
     "airy", "aitoff", "alsk", "apian", "august", "axisswap", "bacon",
-    "bertin1953", "bipc", "boggs", "calcofi", "cart", "cass",
-    "cc", "ccon", "cea", "chamb", "collg", "col_urban", "comill",
+    "bertin1953", "bipc", "boggs", "bonne", "calcofi", "cart",
+    "cass", "cc", "ccon", "cea", "chamb", "collg", "col_urban", "comill",
     "crast", "defmodel", "deformation", "denoy", "airocean", "eck1",
     "eck2", "eck3", "eck4", "eck5", "eck6", "eqearth", "eqc", "eqdc",
     "euler", "etmerc", "fahey", "fouc", "fouc_s", "gall", "geoc",
@@ -137,8 +137,8 @@ ALL_IDS = [
 SKIP = {"pipeline", "push", "pop"}
 
 
-@pytest.fixture(scope="module", autouse=True)
-def _sweep_grids():
+def register_sweep_grids():
+    """Synthetic grids, TIN and deformation model named by GRID_OPS."""
     from proj_4_spark.kernels.defmodel import DefGridSet, grid_from_bands
     from proj_4_spark.kernels.gridshift import Grid, Tin, synthetic_hgrid
 
@@ -183,11 +183,20 @@ def _sweep_grids():
                               "interpolation_method": "bilinear",
                               "filename": "sweep_dm"},
             "time_function": {"type": "constant", "parameters": {}}}]})
-    yield
+
+
+def unregister_sweep_grids():
     for k in ("sweep_h", "sweep_v", "sweep_uni", "sweep_vel",
               "sweep_tin", "sweep_dm"):
         P.GRID_REGISTRY.pop(k, None)
     P.DEFMODEL_REGISTRY.pop("sweep_model", None)
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _sweep_grids():
+    register_sweep_grids()
+    yield
+    unregister_sweep_grids()
 
 
 LON, LAT = np.meshgrid(np.linspace(-170, 170, 13),
@@ -229,7 +238,8 @@ def test_pipeline_combinators():
 # Ops whose inverse (closed-form or generic Newton) round-trips every
 # finite forward point of the world grid to <1e-6 deg.
 ROUNDTRIP_FULL = [
-    "aea", "aeqd", "affine", "aitoff", "axisswap", "boggs", "calcofi",
+    "aea", "aeqd", "affine", "aitoff", "axisswap", "boggs", "bonne",
+    "calcofi",
     "cart", "cass", "cc", "cea", "collg", "comill", "crast", "denoy",
     "airocean", "eck1", "eck2", "eck3", "eck4", "eck5", "eck6",
     "eqearth", "eqc", "eqdc", "euler", "etmerc", "fahey", "fouc",
@@ -286,3 +296,14 @@ def test_op_roundtrip(pid):
     frac = good.sum() / max(int(fin.sum()), 1)
     floor = 0.999 if pid in ROUNDTRIP_FULL else ROUNDTRIP_FLOOR[pid]
     assert frac >= floor, f"{pid}: roundtrip frac {frac:.3f} < {floor}"
+
+
+@pytest.mark.parametrize("projstring, exc, msg", [
+    ("+ellps=GRS80", ValueError, "missing \\+proj"),
+    ("+proj=pipeline +step +proj=pipeline +step +proj=noop", ValueError,
+     "nested pipeline"),
+    ("+proj=no_such_op +R=6371000", NotImplementedError, "no_such_op"),
+])
+def test_dispatch_errors(projstring, exc, msg):
+    with pytest.raises(exc, match=msg):
+        compile_projstring(projstring)
