@@ -837,11 +837,6 @@ def direct(g: Geodesic, lat1, lon1, azi1, s12, want_scale: bool = False):
 
 # convenience wrappers -----------------------------------------------------
 
-def inverse_wgs84(lat1, lon1, lat2, lon2):
-    g = Geodesic.init(6378137.0, 1 / 298.257223563)
-    return inverse(g, lat1, lon1, lat2, lon2)
-
-
 def vincenty_inverse(lat1, lon1, lat2, lon2, a=6378137.0, f=1 / 298.257223563,
                      max_iter=200, tol=1e-12):
     """Independent Vincenty (1975) inverse as a cross-check oracle for

@@ -60,15 +60,6 @@ def _sign_bits(dots: Column, start: int, rows: int) -> Column:
     return acc
 
 
-def bucket_expr(vec: Column, planes: np.ndarray) -> Column:
-    """LSH bucket id: sign bit per hyperplane (one-pass dots)."""
-    n = len(planes)
-    return F.element_at(
-        F.transform(F.array(dots_expr(vec, planes)),
-                    lambda d: _sign_bits(d, 0, n)),
-        1)
-
-
 def banded_buckets_expr(vec: Column, planes: np.ndarray, bands: int,
                         rows: int) -> Column:
     """array<int> of per-band bucket ids from ONE dot-product pass over

@@ -43,24 +43,6 @@ def polygon_rows(n_vertices: int = 6) -> list[dict]:
     return rows
 
 
-def polygons_df(spark):
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("polygon_id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("ring_lon", T.ArrayType(T.DoubleType())),
-        T.StructField("ring_lat", T.ArrayType(T.DoubleType())),
-        T.StructField("lon_min", T.DoubleType()),
-        T.StructField("lon_max", T.DoubleType()),
-        T.StructField("lat_min", T.DoubleType()),
-        T.StructField("lat_max", T.DoubleType()),
-    ])
-    return spark.createDataFrame(
-        [tuple(r[f.name] for f in schema.fields) for r in polygon_rows()],
-        schema)
-
-
 def polygons_values_sql() -> str:
     """The same polygons as a DuckDB VALUES table with flattened vertex
     columns (v0x..v5y) for the unrolled convex containment oracle."""

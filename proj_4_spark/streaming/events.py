@@ -42,21 +42,3 @@ def run_to_memory(spark: SparkSession, events_dir: str,
     q.awaitTermination(timeout_s)
     q.stop()
     return spark.table(name)
-
-
-def sessionize(spark: SparkSession, events_dir: str, gap_minutes: int = 30):
-    """Custom stateful operator: session windows per user via
-    applyInPandasWithState-style semantics.  Implemented with the
-    built-in session_window (Spark >= 3.2), which maintains per-key
-    state with the given gap."""
-    src = (spark.readStream.schema(EVENTS_SCHEMA)
-           .option("maxFilesPerTrigger", 1)
-           .parquet(events_dir))
-    return (src.withWatermark("ts", "2 hours")
-               .groupBy(F.session_window("ts", f"{gap_minutes} minutes")
-                        .alias("sess"), "user_id")
-               .agg(F.count("*").alias("n_events"),
-                    F.round(F.sum("value"), 4).alias("sum_value"))
-               .select(F.col("sess.start").alias("session_start"),
-                       F.col("sess.end").alias("session_end"),
-                       "user_id", "n_events", "sum_value"))

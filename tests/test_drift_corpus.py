@@ -5,6 +5,9 @@ This is drift detection, not ground truth: the corpus holds what the
 engine computed when it was frozen (scripts/freeze_drift_corpus.py),
 so a failure means outputs moved, not that they became wrong.  A change
 meant to move outputs re-freezes the corpus and says which cases moved.
+The corpus was frozen with NumPy 1.26.4; another NumPy build, or another
+CPU's vectorised math routines, can move last bits, and then the corpus
+is re-frozen at the parent commit of the change that moves them.
 """
 
 import os

@@ -239,8 +239,8 @@ def test_pipeline_combinators():
 # finite forward point of the world grid to <1e-6 deg.
 ROUNDTRIP_FULL = [
     "aea", "aeqd", "affine", "aitoff", "axisswap", "boggs", "bonne",
-    "calcofi",
-    "cart", "cass", "cc", "cea", "collg", "comill", "crast", "denoy",
+    "calcofi", "cart", "cass", "cc", "cea", "collg", "comill", "crast",
+    "denoy",
     "airocean", "eck1", "eck2", "eck3", "eck4", "eck5", "eck6",
     "eqearth", "eqc", "eqdc", "euler", "etmerc", "fahey", "fouc",
     "fouc_s", "gall", "geoc", "geocent", "geogoffset", "geos", "gins8",
@@ -307,3 +307,8 @@ def test_op_roundtrip(pid):
 def test_dispatch_errors(projstring, exc, msg):
     with pytest.raises(exc, match=msg):
         compile_projstring(projstring)
+
+
+def test_operation_table_is_the_sweep():
+    """OPERATIONS holds every swept id plus the push/pop combinators."""
+    assert set(P.OPERATIONS) == set(ALL_IDS) | {"push", "pop"}
