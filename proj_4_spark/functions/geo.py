@@ -150,12 +150,13 @@ def s2_cell_to_face_ij_udf(level: int):
     return _decode
 
 
-def s2_parent_udf(level: int):
-    @pandas_udf("long")
-    def _parent(cid: pd.Series) -> pd.Series:
-        return pd.Series(s2idx.parent(cid.to_numpy(np.int64), level))
-
-    return _parent
+def s2_parent(cell: Column, level: int) -> Column:
+    """Ancestor S2 cell id at ``level`` as a Catalyst bit expression,
+    ``(id & -lsb) | lsb`` (the same rule as :func:`index.s2.parent`);
+    no Python boundary, and a null id gives a null parent."""
+    lsb = int(s2idx.lsb_for_level(level))
+    return (cell.bitwiseAND(F.lit(-lsb).cast("long"))
+                .bitwiseOR(F.lit(lsb).cast("long")))
 
 
 def a7hex_cell_udf(res: int):

@@ -113,14 +113,14 @@ def run(spark: SparkSession, in_path: str, out_dir: str,
         tr, desc = projstr, projstr
 
     cp = CheckpointedPipeline(spark, out_dir)
-    result = cp.stage(
+    cp.stage(
         "transformed",
         lambda: transform_frame(spark.read.parquet(in_path), tr,
-                                direction, x_col, y_col, z_col, t_col))
-    n_rows = result.count()
-    n_err = result.where(F.col("errno") != ERRNO_OK).count()
+                                direction, x_col, y_col, z_col, t_col),
+        F.count(F.when(F.col("errno") != ERRNO_OK, 1)).alias("errors"))
+    seen = cp.observed["transformed"]
     return {"stages": cp.metrics(),
-            "rows": n_rows, "errors": n_err,
+            "rows": seen["rows"], "errors": seen["errors"],
             "projstr": desc, "direction": direction}
 
 

@@ -38,7 +38,8 @@ def build_session(master: str | None = None, shuffle_partitions: int = 32):
 def run(spark: SparkSession, sf_dir: str, out_dir: str,
         cell_level: int = 12, cover_level: int = 8,
         n_salt: int = 16) -> dict:
-    from proj_4_spark.functions.geo import s2_cell_udf, utm_all_zones_udf
+    from proj_4_spark.functions.geo import (s2_cell_udf, s2_parent,
+                                            utm_all_zones_udf)
     from proj_4_spark.operators.spatial_join import pip_join
     from proj_4_spark.plans.checkpoint import CheckpointedPipeline
     from proj_4_spark.plans.salting import salted_agg
@@ -79,29 +80,23 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str,
         .select("url", "doc_id", "mention_idx", "cell", "polygon_id"))
 
     # 5a. per-polygon counts (salted two-stage agg: Zipf hot head)
-    poly_counts = cp.stage(
+    cp.stage(
         "polygon_counts",
         lambda: salted_agg(tiles, ["polygon_id"], "doc_id", n_salt=n_salt,
                            count_alias="n_docs").orderBy("polygon_id"))
 
     # 5b. per-cell histogram at a coarser roll-up level
-    def _cell_counts():
-        from proj_4_spark.functions.geo import s2_parent_udf
-
-        parent = s2_parent_udf(cover_level)(F.col("cell"))
-        return (encoded.withColumn("cell8", parent)
-                .groupBy("cell8").agg(F.count("*").alias("n_mentions")))
-
-    cell_counts = cp.stage("cell_counts", _cell_counts)
+    cp.stage(
+        "cell_counts",
+        lambda: encoded.withColumn("cell8", s2_parent(F.col("cell"),
+                                                      cover_level))
+        .groupBy("cell8").agg(F.count("*").alias("n_mentions")))
 
     return {
         "stages": cp.metrics(),
-        "rows": {
-            "mined": mined.count(),
-            "tile_assignments": tiles.count(),
-            "polygon_counts": poly_counts.count(),
-            "cell_counts": cell_counts.count(),
-        },
+        "rows": {s: cp.observed[s]["rows"]
+                 for s in ("mined", "tile_assignments", "polygon_counts",
+                           "cell_counts")},
     }
 
 

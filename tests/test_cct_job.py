@@ -60,6 +60,8 @@ def test_cct_job_resume_skips_stage(spark, tmp_path, coords_parquet):
     s1 = cct_job.run(spark, coords_parquet, out, PS)
     s2 = cct_job.run(spark, coords_parquet, out, PS)
     assert s1["rows"] == s2["rows"]
+    # the observed error count comes back from the marker
+    assert s1["errors"] == s2["errors"] == 1
     # resumed run must not have re-written the stage metrics
     assert s2["stages"] == s1["stages"]
 

@@ -45,6 +45,17 @@ def test_salted_join_matches_plain(spark, sf_dir):
     assert plain == salted
 
 
+def _spark_jobs(spark, group, fn):
+    """(fn(), number of Spark jobs fn launched), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_checkpoint_resume(spark, sf_dir, tmp_path):
     calls = {"n": 0}
 
@@ -55,10 +66,59 @@ def test_checkpoint_resume(spark, sf_dir, tmp_path):
     cp = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
     a = cp.stage("coords50", build)
     assert a.count() == 50 and calls["n"] == 1
+    assert cp.observed["coords50"] == {"rows": 50}
     b = cp.stage("coords50", build)  # resume: no recompute
     assert b.count() == 50 and calls["n"] == 1
     m = cp.metrics()
     assert m and m[0]["stage"] == "coords50" and m[0]["rows"] == 50
+
+
+def test_checkpoint_stage_launches_only_the_write(spark, sf_dir, tmp_path):
+    """A fresh stage over a narrow frame runs one Spark job (the
+    write): rows come from the write's observation, the read-back uses
+    the known schema.  A resumed stage runs none and takes its rows
+    and extra metrics from the marker."""
+    root = str(tmp_path / "ckpt")
+    odd = F.count(F.when(F.col("doc_id") % 2 == 1, 1)).alias("odd")
+    coords = coords_df(spark, sf_dir)  # the source's schema job runs here
+
+    def build():
+        return coords
+
+    cp = CheckpointedPipeline(spark, root)
+    out, jobs = _spark_jobs(spark, "ckpt-fresh",
+                            lambda: cp.stage("coords", build, odd))
+    assert jobs == 1
+    n = spark.read.parquet(os.path.join(root, "coords")).count()
+    assert cp.observed["coords"]["rows"] == n == out.count()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert cp.observed["coords"]["odd"] == docs.where("doc_id % 2 = 1").count()
+    assert out.schema == spark.read.parquet(os.path.join(root, "coords")).schema
+    assert cp.metrics()[0]["odd"] == cp.observed["coords"]["odd"]
+
+    cp2 = CheckpointedPipeline(spark, root)
+    again, jobs = _spark_jobs(spark, "ckpt-resume",
+                              lambda: cp2.stage("coords", build, odd))
+    assert jobs == 0
+    assert cp2.observed["coords"] == cp.observed["coords"]
+    assert again.schema == out.schema
+
+
+def test_checkpoint_empty_stage(spark, sf_dir, tmp_path):
+    """An empty stage output records rows == 0 (the observation still
+    arrives) and resumes."""
+    root = str(tmp_path / "ckpt")
+
+    def build():
+        return coords_df(spark, sf_dir).where(F.col("doc_id") < 0)
+
+    cp = CheckpointedPipeline(spark, root)
+    assert cp.stage("none", build).count() == 0
+    assert cp.observed["none"] == {"rows": 0}
+    assert cp.metrics()[0]["rows"] == 0
+    cp2 = CheckpointedPipeline(spark, root)
+    assert cp2.stage("none", build).count() == 0
+    assert cp2.observed["none"] == {"rows": 0}
 
 
 def test_streaming_matches_batch(spark, sf_dir, tmp_path):

@@ -86,3 +86,28 @@ def test_cover_bbox_superset():
             lat = rng.uniform(la0, la1, 3000)
             cells = s2.cell_id(lon, lat, lvl)
             assert set(cells.tolist()) <= cover
+
+
+def test_spark_parent_matches_index_all_levels(spark):
+    """functions.geo.s2_parent (Catalyst bit expression) equals
+    index.s2.parent at every level, on ids of all six faces — faces
+    4 and 5 are negative int64 — and keeps a null id null."""
+    from pyspark.sql import functions as F
+
+    from proj_4_spark.functions.geo import s2_parent
+
+    rng = np.random.RandomState(7)
+    face = np.repeat(np.arange(6), 50)
+    ids = s2.from_face_ij(face, rng.randint(0, 1 << 30, face.size),
+                          rng.randint(0, 1 << 30, face.size))
+    ids = np.concatenate([ids, s2.parent(ids, 17)])
+    assert (ids < 0).sum() == 200  # faces 4-5 at both levels
+    df = spark.createDataFrame([(int(c),) for c in ids] + [(None,)],
+                               "cell long")
+    rows = df.select("cell", *(s2_parent(F.col("cell"), lv).alias(f"p{lv}")
+                               for lv in range(31))).collect()
+    got = {r["cell"]: r for r in rows}
+    assert all(v is None for v in got.pop(None))
+    for lv in range(31):
+        want = s2.parent(ids, lv)
+        assert [got[int(c)][f"p{lv}"] for c in ids] == want.tolist()

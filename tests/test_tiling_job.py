@@ -14,9 +14,13 @@ def test_tiling_job_end_to_end_and_resume(spark, sf_dir, tmp_path):
     stages = {m["stage"] for m in summary["stages"]}
     assert {"mined", "projected", "encoded", "tile_assignments",
             "polygon_counts", "cell_counts"} <= stages
-    # lineage metrics recorded per stage
+    # lineage metrics recorded per stage; the rows observed during the
+    # write equal the rows actually written
     for m in summary["stages"]:
-        assert m["rows"] >= 0 and m["wall_s"] >= 0 and m["partitions"] >= 1
+        assert m["wall_s"] >= 0 and m["partitions"] >= 1
+        written = spark.read.parquet(os.path.join(out, m["stage"])).count()
+        assert m["rows"] == written, m["stage"]
+        assert summary["rows"].get(m["stage"], written) == written
 
     # resume: markers exist, a second run recomputes nothing (wall
     # times unchanged in the metrics files — they are only written on
