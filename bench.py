@@ -21,7 +21,7 @@ import time
 
 HEADLINE = [
     "s2_cell_counts_l8",      # S2 encode + cell aggregation
-    "pip_polygon_counts",     # cell-cover broadcast PIP join
+    "pip_polygon_counts",     # one-pass PIP join (cover lookup + ray cast)
     "utm_snyder_fwd",         # vectorized TM projection
     "webmerc_fwd",            # catalyst+UDF projection
     "knn_top5",               # broadcast kNN window top-k
@@ -163,7 +163,8 @@ def materialize_coords(spark, n_docs: int, partitions: int) -> str:
 def flagship_pipeline(spark, n_docs: int, partitions: int,
                       input_path: str | None = None):
     """The headline job: scan -> S2 encode (level 12) + cell agg +
-    cell-cover broadcast PIP join + per-polygon counts."""
+    PIP join (one Arrow pass: cover lookup + exact ray cast, then
+    explode) + per-polygon counts."""
     from pyspark.sql import functions as F
 
     from proj_4_spark.functions.geo import s2_cell_udf
@@ -223,7 +224,8 @@ def flagship_e2e_pipeline(spark, input_path: str,
                           persist_mined: bool = True):
     """The full north-star job on a pages table: scan -> vectorized
     regex coordinate mining -> webmerc projection -> S2 encode (l12) +
-    cell agg -> cell-cover broadcast PIP join -> per-polygon counts.
+    cell agg -> PIP join (one Arrow pass: cover lookup + exact ray
+    cast, then explode) -> per-polygon counts.
     More FLOPs per scanned byte than the coords-only flagship — the
     shape of the actual 10^12-row production pipeline."""
     from pyspark.sql import functions as F

@@ -73,7 +73,8 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str,
 
     encoded = cp.stage("encoded", _encode)
 
-    # 4. PIP tile assignments (broadcast cover + exact ray cast)
+    # 4. PIP tile assignments (one Arrow pass: cover lookup + exact ray
+    #    cast, then explode)
     tiles = cp.stage(
         "tile_assignments",
         lambda: pip_join(encoded, polygon_rows(), level=cover_level)

@@ -399,8 +399,8 @@ WHERE {P.convex_inside_sql("c.lon", "c.lat")}
 ORDER BY c.doc_id, polys.polygon_id
 """)
 def q_pip_join(spark, sf_dir):
-    """Point-in-polygon join: S2 cell-cover candidate generation
-    (broadcast) + exact ray casting.  Oracle: unrolled convex
+    """Point-in-polygon join in one Arrow pass: S2 cell-cover lookup +
+    exact ray cast, then explode.  Oracle: unrolled convex
     cross-product containment over the same literal vertices."""
     pts = _coords(spark, sf_dir)
     out = SJ.pip_join(pts, _POLY_ROWS, level=8)
